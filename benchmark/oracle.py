@@ -1,12 +1,13 @@
 """Independent expected outputs, computed by DuckDB from the same
 generated inputs the program reads.
 
-* invoices — the catalog's q20 oracle (the invoice SQL spec over the
-  mapping layer), shaped like the ``;``-CSV the generate step writes:
-  gateways renamed, empty strings as nulls, money as doubles;
-* verification — the q61 oracle's offender count per check;
-* incremental state — ``gen.merge_sql`` applied batch by batch, and
-  the invoice spec over that state for one day's window;
+* store state — ``gen.merge_sql`` applied batch by batch;
+* invoices — the invoice SQL spec the catalog's q20 oracle renders,
+  over that state for one day's window, shaped like the ``;``-CSV the
+  generate step writes: gateways renamed, empty strings as nulls,
+  money as doubles;
+* verification — the q61 oracle's offender count per check, over the
+  same invoices;
 * catalog — each sampled query's oracle row count.
 """
 
@@ -16,7 +17,11 @@ import pandas as pd
 
 from shopify_db_spark.plans import load_all
 from shopify_db_spark.plans.commerce_checks import GATEWAY_MAP
-from shopify_db_spark.plans.invoice_oracle import TABLE_NAMES, render_invoice_oracle
+from shopify_db_spark.plans.invoice_oracle import (
+    TABLE_NAMES,
+    render_invoice_cte_prefix,
+    render_invoice_oracle,
+)
 from shopify_db_spark.schemas import INVOICE_CSV_COLUMNS
 
 _INT = ("CUSTOMER NO", "ORDER LINE - COUNT", "ORDER LINE - VAT CODE", "INVOICE NO")
@@ -40,24 +45,27 @@ def _csv_shape(invoice_sql: str) -> str:
     return f"SELECT {', '.join(cols)} FROM ({invoice_sql}) inv"
 
 
-def invoice_csv(con) -> pd.DataFrame:
-    """Expected CSV content of the full-window generate step."""
-    return con.execute(_csv_shape(load_all()["q20_invoice_pipeline"].oracle)).df()
+def _state(prefix: str) -> dict[str, str]:
+    return {t: f"{prefix}{t}" for t in TABLE_NAMES}
 
 
-def verify_counts(con) -> dict[str, int]:
-    """Expected offender count per verification check."""
-    rows = con.execute(load_all()["q61_invoice_verify"].oracle).fetchall()
-    return {name: int(n) for name, n, _ in rows}
+def invoice_csv(con, day: str, start_id: int, prefix: str) -> pd.DataFrame:
+    """Expected CSV content of the generate step for one day over the
+    ``<prefix><table>`` state: the invoice spec q20's oracle renders,
+    for that window."""
+    return con.execute(_csv_shape(render_invoice_oracle(
+        day, day, start_id, table_map=_state(prefix)))).df()
 
 
-def day_invoice_rows(con, day: str, start_id: int, prefix: str) -> int:
-    """Invoice lines the generate step must emit for one day over the
-    ``<prefix><table>`` state."""
-    sql = render_invoice_oracle(
-        day, day, start_id, table_map={t: f"{prefix}{t}" for t in TABLE_NAMES}
-    )
-    return con.execute(f"SELECT COUNT(*) FROM ({sql}) inv").fetchone()[0]
+def verify_counts(con, day: str, start_id: int, prefix: str) -> dict[str, int]:
+    """Expected offender count per verification check of that day's
+    invoices: the q61 oracle with its invoice CTEs rendered for the
+    window and state."""
+    q61 = load_all()["q61_invoice_verify"].oracle
+    checks = q61[q61.index(",\nnorm AS MATERIALIZED ("):]  # over invoice_base
+    sql = render_invoice_cte_prefix(day, day, start_id, table_map=_state(prefix),
+                                    cte_name="invoice_base") + checks
+    return {name: int(n) for name, n, _ in con.execute(sql).fetchall()}
 
 
 def query_rows(con, names: list[str]) -> dict[str, int]:

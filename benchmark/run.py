@@ -1,24 +1,32 @@
 """The repository benchmark: one workload, one seed, one result line.
 
-    python3 benchmark/run.py --workload sync --seed 1 --seconds 20 --trace 0
+    python3 benchmark/run.py --workload sync --seed 1 --seconds 30 --trace 0
 
 Run from the repository root. Inputs are generated from the seed
-(``gen.py``); the program sees only the generated files, and every
-output is checked against an independent DuckDB oracle
-(``oracle.py``). Workloads (``workloads.py``; rationale in README.md):
+(``gen.py``) in this process; each round then runs in its own process
+(``measure.py``) on a fresh JVM, as every CLI invocation does, and
+sees only the generated files. After the rounds, every output is
+checked here against an independent DuckDB oracle (``oracle.py``).
+Workloads (``workloads.py``; rationale in README.md):
 
 * ``sync`` — raw JSON → store → invoices → verify → CSV → re-verify
   on a cold, empty store, then one daily drop of new and updated
   orders and that day's invoice run;
 * ``analytics`` — a fixed sample of catalog queries, cold per query.
 
+Rounds repeat until ``--seconds`` is spent, at least one; each
+end-to-end metric is the median over the rounds. With ``--trace 1``
+the run makes a traced round and then, if it can still end in time,
+an untraced round of the same inputs; it reports the traced round's
+per-layer metrics, and in the detail line the tracing overhead: the
+difference of the two run times (null when the untraced round did not
+fit).
+
 The last stdout line is one JSON object: ``correct``, ``attempted``,
-``failed`` and ``metrics`` — the end-to-end metrics with ``--trace 0``,
-the per-layer metrics with ``--trace 1``. The line before it carries
-the settings and the workload's own breakdown. Everything the run
+``failed`` and ``metrics``. The line before it carries the settings,
+every round with its breakdown, and the failures. Everything the run
 writes stays under ``.bench_work/`` in the repository root; a traced
-run leaves its per-layer JSON and span file in
-``.bench_work/results/``.
+run leaves its per-layer JSON and span file in ``.bench_work/results/``.
 """
 
 from __future__ import annotations
@@ -28,35 +36,23 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK_ROOT = os.path.join(ROOT, ".bench_work")
 RESULTS = os.path.join(WORK_ROOT, "results")
 
-#: A round during which the hypervisor took more than this share of
-#: the machine's CPU time measured the neighbours more than the
-#: program (such rounds ran 1.6-1.8x slower here); it is discarded
-#: and run once more on a fresh JVM. The detail line lists every
-#: attempt with its steal.
-STEAL_LIMIT = 0.05
-ATTEMPTS = 2
-
-
-def _process_start() -> float:
-    """Wall-clock time this process started (kernel clock, 10 ms ticks)."""
-    with open("/proc/self/stat") as f:
-        start_ticks = int(f.read().rsplit(")", 1)[1].split()[19])
-    with open("/proc/uptime") as f:
-        uptime = float(f.read().split()[0])
-    return time.time() - uptime + start_ticks / os.sysconf("SC_CLK_TCK")
+#: no round starts that would be expected to end later than this many
+#: seconds after the process started (the last round's time is the
+#: expectation)
+DEADLINE_S = 120
 
 
 def _pin_environment(work: str) -> dict[str, str]:
-    """Settings every run uses, applied before Spark starts."""
+    """Settings every round uses, inherited by its process."""
     cpus = len(os.sched_getaffinity(0))
     mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     env = {
@@ -75,67 +71,36 @@ def _pin_environment(work: str) -> dict[str, str]:
     return env
 
 
-def _cpu_s(pid: int) -> float:
-    """User plus system CPU seconds of process ``pid`` and its reaped children."""
-    with open(f"/proc/{pid}/stat") as f:
-        fields = f.read().rsplit(")", 1)[1].split()
-    return sum(int(x) for x in fields[11:15]) / os.sysconf("SC_CLK_TCK")
-
-
-def _rss_mb(pid: int) -> float:
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmHWM:"):
-                return int(line.split()[1]) / 1024
-    raise RuntimeError(f"no VmHWM for pid {pid}")
-
-
-def _stop(spark, jvm) -> None:
-    """Stop the session, wait for its JVM to exit, and forget the
-    gateway so the next session starts a fresh JVM."""
-    from pyspark import SparkContext
-
-    spark.stop()
-    SparkContext._gateway.shutdown()
-    jvm.stdin.close()
-    jvm.wait(timeout=60)
-    SparkContext._gateway = SparkContext._jvm = None
-
-
-def _attempt(workload_cls, args, work: str, t0: float, extra: dict):
-    """Set up, run and check one round on a fresh JVM. Returns the
-    workload, its tracer, set-up seconds since ``t0`` and peak RSS."""
-    from pyspark import SparkContext
-
-    import spans as tr
-    from shopify_db_spark.session import get_spark
-
-    wl = workload_cls(args.seed, args.seconds, work)
-    # inputs and oracles are made while the JVM starts
-    with ThreadPoolExecutor(1) as pool:
-        session = pool.submit(get_spark, app_name=f"bench_{args.workload}",
-                              extra_conf=extra)
-        try:
-            wl.prepare()
-        except BaseException:
-            _stop(session.result(), SparkContext._gateway.proc)
-            raise
-        spark = session.result()
-    jvm = SparkContext._gateway.proc
-    try:
-        tracer = tr.Tracer(spark, args.workload, bool(args.trace))
-        wl.start(spark, tracer)
-        setup_s = time.time() - t0
-        wl.run(lambda: _cpu_s(jvm.pid) + _cpu_s(os.getpid()))
-        wl.check_end()
-        rss_mb = _rss_mb(jvm.pid) + _rss_mb(os.getpid())
-    finally:
-        _stop(spark, jvm)
-    return wl, tracer, setup_s, rss_mb
+def _round(plan: dict, n: int, traced: bool, work: str, timeout: float) -> dict:
+    """Run one round in a fresh process; returns its ``result.json``."""
+    rdir = os.path.join(work, f"round{n}")
+    conf = {
+        "spark.driver.extraJavaOptions":
+            f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData",
+        "spark.sql.warehouse.dir": os.path.join(rdir, "warehouse"),
+    }
+    if traced:
+        os.makedirs(os.path.join(rdir, "events"))
+        conf |= {
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": os.path.join(rdir, "events"),
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        }
+    os.makedirs(rdir, exist_ok=True)
+    with open(os.path.join(rdir, "plan.json"), "w") as f:
+        json.dump(plan | {"dir": rdir, "trace": traced, "conf": conf}, f)
+    subprocess.run([sys.executable, os.path.join(HERE, "measure.py"), rdir],
+                   stdout=sys.stderr, check=True, timeout=timeout)
+    with open(os.path.join(rdir, "result.json")) as f:
+        res = json.load(f)
+    lo, hi = res["window"]
+    res |= {"round": n, "traced": traced, "dir": rdir, "conf": conf,
+            "steal_share": res["steal_s"] / ((hi - lo) * len(os.sched_getaffinity(0)))}
+    return res
 
 
 def main(argv: list[str] | None = None) -> int:
-    t0 = _process_start()
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--seed", type=int, required=True)
@@ -143,74 +108,84 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = p.parse_args(argv)
 
-    work_root = os.path.join(WORK_ROOT, f"{os.path.basename(args.workload)}-{os.getpid()}")
-    settings = _pin_environment(work_root)
     sys.path.insert(0, ROOT)
-    try:
-        import spans as tr  # noqa: E402  (the package needs ROOT on sys.path)
-        import workloads  # noqa: E402
-    except ImportError:
-        shutil.rmtree(work_root)
-        raise
+    import spans as tr  # noqa: E402  (the package needs ROOT on sys.path)
+    import workloads  # noqa: E402
+    from measure import process_start  # noqa: E402
 
+    t0 = process_start()
     if args.workload not in workloads.WORKLOADS:
-        shutil.rmtree(work_root)
         p.error(f"unknown workload {args.workload!r}; "
                 f"choose from {sorted(workloads.WORKLOADS)}")
+    work = os.path.join(WORK_ROOT, f"{args.workload}-{os.getpid()}")
+    settings = _pin_environment(work)
+    try:
+        wl = workloads.WORKLOADS[args.workload](args.seed, work)
+        plan = {"workload": args.workload, **wl.generate()}
+        gen_s = time.time() - t0
 
-    cpus = int(settings["SPARK_GRAFT_CPUS"])
-    attempts = []
-    for n in range(ATTEMPTS):
-        work = os.path.join(work_root, f"attempt{n}")
-        extra = {
-            "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={settings['TMPDIR']} -XX:-UsePerfData",
-            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+        rounds: list[dict] = []
+        wall = 0.0
+
+        def another(traced: bool) -> dict | None:
+            """One more round, or None when it would not end in time."""
+            nonlocal wall
+            t = time.time()
+            if rounds and t + wall > t0 + DEADLINE_S:
+                return None
+            try:
+                res = _round(plan, len(rounds), traced, work, t0 + DEADLINE_S + 15 - t)
+            except subprocess.TimeoutExpired:
+                if not rounds:
+                    raise
+                return None
+            wall = time.time() - t
+            rounds.append(res)
+            return res
+
+        if args.trace:
+            res = another(True)
+            ref = another(False)  # the same work untraced, when there is time
+        else:
+            t_end = time.time() + args.seconds
+            while another(False) is not None and time.time() < t_end:
+                pass
+
+        wl.oracles()
+        for r in rounds:
+            wl.check_round(r)
+        detail = {
+            "settings": settings | rounds[-1]["conf"], "workload": args.workload,
+            "seed": args.seed,
+            "gen_s": gen_s, "failures": wl.failures[:20],
+            "rounds": [{k: r[k] for k in ("round", "traced", "setup_s", "run_s",
+                                          "run_cpu_s", "peak_rss_mb", "steal_share",
+                                          "steps")} | wl.details(r) for r in rounds],
         }
         if args.trace:
-            os.makedirs(os.path.join(work, "events"))
-            extra |= {
-                "spark.eventLog.enabled": "true",
-                "spark.eventLog.dir": os.path.join(work, "events"),
-                "spark.eventLog.compress": "false",
-                "spark.eventLog.rolling.enabled": "false",
-            }
-        wl, tracer, setup_s, rss_mb = _attempt(
-            workloads.WORKLOADS[args.workload], args, work, t0, extra)
-        lo, hi = wl.window
-        steal = wl.steal_s / ((hi - lo) * cpus)
-        attempts.append({"run_s": wl.summary()["run_s"], "steal_share": steal})
-        if steal <= STEAL_LIMIT:
-            break
-        t0 = time.time()
-    settings |= extra
+            metrics = wl.layer_metrics(
+                res, tr.parse_event_log(os.path.join(res["dir"], "events")))
+            metrics["trace.run_s"] = (res["run_s"], "s")
+            detail["trace_overhead_s"] = res["run_s"] - ref["run_s"] if ref else None
+            os.makedirs(RESULTS, exist_ok=True)
+            tag = f"{args.workload}-seed{args.seed}"
+            with open(os.path.join(RESULTS, f"{tag}-spans.json"), "w") as f:
+                json.dump(res["spans"], f, indent=1)
+            with open(os.path.join(RESULTS, f"{tag}-layers.json"), "w") as f:
+                json.dump({k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
+                          f, indent=1, sort_keys=True)
+        else:
+            def median(key: str) -> float:
+                return statistics.median(r[key] for r in rounds)
 
-    summary = wl.summary()
-    metrics = {
-        "setup_s": (setup_s, "s"),
-        "run_s": (summary["run_s"], "s"),
-        "run_cpu_s": (summary["run_cpu_s"], "s"),
-        "peak_rss_mb": (rss_mb, "MB"),
-    }
-    detail = {"settings": settings, "workload": args.workload, "seed": args.seed,
-              "attempts": attempts, "failures": wl.failures[:20], **summary}
-    os.makedirs(RESULTS, exist_ok=True)
-    tag = f"{args.workload}-seed{args.seed}"
-    if args.trace:
-        layers = wl.layer_metrics(tr.parse_event_log(os.path.join(work, "events")))
-        untraced = _untraced_run_s(args.workload)
-        layers["trace.run_s"] = (summary["run_s"], "s")
-        layers["trace.overhead_s"] = (summary["run_s"] - untraced if untraced else 0.0, "s")
-        detail["untraced_run_s"] = untraced
-        metrics = layers
-        tracer.dump(os.path.join(RESULTS, f"{tag}-spans.json"))
-        with open(os.path.join(RESULTS, f"{tag}-layers.json"), "w") as f:
-            json.dump({k: {"value": v, "unit": u} for k, (v, u) in layers.items()},
-                      f, indent=1, sort_keys=True)
-    else:
-        with open(os.path.join(RESULTS, f"{args.workload}-untraced.jsonl"), "a") as f:
-            f.write(json.dumps({"seed": args.seed, **summary}) + "\n")
-    shutil.rmtree(work_root, ignore_errors=True)
+            metrics = {
+                "setup_s": (gen_s + median("setup_s"), "s"),
+                "run_s": (median("run_s"), "s"),
+                "run_cpu_s": (median("run_cpu_s"), "s"),
+                "peak_rss_mb": (median("peak_rss_mb"), "MB"),
+            }
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
     print("# " + json.dumps(detail, sort_keys=True, default=str))
     print(json.dumps({
@@ -220,16 +195,6 @@ def main(argv: list[str] | None = None) -> int:
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
     }))
     return 0
-
-
-def _untraced_run_s(workload: str) -> float | None:
-    """Median ``run_s`` of the untraced runs recorded in this checkout."""
-    path = os.path.join(RESULTS, f"{workload}-untraced.jsonl")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        vals = [json.loads(line)["run_s"] for line in f if line.strip()]
-    return statistics.median(vals) if vals else None
 
 
 if __name__ == "__main__":

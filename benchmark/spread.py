@@ -1,17 +1,20 @@
-"""Run-to-run spread of the end-to-end metrics.
+"""Run-to-run spread of the end-to-end metrics, and the shift between sets.
 
-    python3 benchmark/spread.py RESULTS.jsonl [RESULTS.jsonl ...]
+    python3 benchmark/spread.py SET_A.jsonl [SET_B.jsonl ...]
 
-Each file holds result lines of ``run.py`` (one workload, one seed
-per line; ``#`` detail lines are skipped). Prints, per metric, the
-median and the distance between the first and third quartile
-(``statistics.quantiles(values, n=4)``) as a share of the median —
-the figure a metric's bound in ``BENCHMARK.json`` must exceed.
+Each file holds the stdout of ``run.py`` runs, one workload, one seed
+per run (``#`` detail lines are skipped). Prints JSON: per file and
+metric, the median and the distance between the first and third
+quartile (``statistics.quantiles(values, n=4)``) as a share of the
+median — the figure a metric's bound in ``BENCHMARK.json`` must
+exceed — and, for each later file, the change of each median against
+the first file's.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 
@@ -21,26 +24,26 @@ def load(path: str) -> list[dict]:
         return [json.loads(x) for x in f if x.strip() and not x.startswith("#")]
 
 
-def spreads(runs: list[dict]) -> dict[str, tuple[float, float]]:
-    """(median, quartile spread) per metric."""
-    out = {}
+def summary(runs: list[dict]) -> dict:
+    out: dict = {"runs": len(runs), "attempted": sum(r["attempted"] for r in runs),
+                 "failed": sum(r["failed"] for r in runs)}
     for name in runs[0]["metrics"]:
         vals = [r["metrics"][name]["value"] for r in runs]
         q1, _, q3 = statistics.quantiles(vals, n=4)
         med = statistics.median(vals)
-        out[name] = (med, (q3 - q1) / med)
+        out[name] = {"median": round(med, 4), "quartile_spread": round((q3 - q1) / med, 4)}
     return out
 
 
 def main(paths: list[str]) -> int:
-    for path in paths:
-        runs = load(path)
-        print(f"{path}: {len(runs)} runs, {sum(r['failed'] for r in runs)} failed "
-              f"of {sum(r['attempted'] for r in runs)} checks")
-        if len(runs) < 2:
-            continue
-        for name, (med, spread) in spreads(runs).items():
-            print(f"  {name:14s} median {med:10.3f}  quartile spread {spread:.3f}")
+    sets = {os.path.basename(p).rsplit(".", 1)[0]: summary(load(p)) for p in paths}
+    first = next(iter(sets.values()))
+    shifts = {
+        f"shift-{name}": {m: round(s[m]["median"] / first[m]["median"] - 1, 4)
+                          for m in s if isinstance(s[m], dict)}
+        for name, s in list(sets.items())[1:]
+    }
+    print(json.dumps(sets | shifts, indent=1))
     return 0
 
 
