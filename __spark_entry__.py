@@ -43,68 +43,68 @@ def entry(spark: SparkSession) -> DataFrame:
 #: emitted by the generator and records how many pins were absorbed
 #: into higher tiers. Entries past the 50-query sample are next
 #: round's starting debt.
-# computed by scripts/rotation.py (base 9b31c4490655108fadea28eb938a3e8d7d309f11; 62 plan-affected this round; 62 stale; 10 freshness-floor; 0 pins, 0 absorbed)
+# computed by scripts/rotation.py (base 779855c60bab92204d3037de8f86b7c53a673dfc; 166 plan-affected this round; 166 stale; 0 freshness-floor; 0 pins, 0 absorbed)
 _DRIVER_SAMPLE_HEAD = [
     "q20_invoice_pipeline",  # round-affected
     "q61_invoice_verify",  # round-affected
+    "q62_upsert_merge",  # round-affected
     "q63_csv_roundtrip",  # round-affected
+    "q64_json_ingest",  # round-affected
+    "q65_json_shipping",  # round-affected
+    "q66_json_variants",  # round-affected
+    "q67_json_refunds",  # round-affected
+    "q68_json_customers",  # round-affected
+    "q21_exact_dedup",  # round-affected
+    "q22_token_stats",  # round-affected
+    "q23_quality_scores",  # round-affected
+    "q24_lang_id",  # round-affected
+    "q25_ngram_jaccard_pairs",  # round-affected
     "q26_minhash_lsh_pairs",  # round-affected
+    "q27_simhash_pairs",  # round-affected
+    "q28_winnow_fingerprints",  # round-affected
+    "q29_bpe_token_counts",  # round-affected
+    "q40_term_stats",  # round-affected
+    "q47_corpus_prep",  # round-affected
     "q76_sparse_cosine_retrieval",  # round-affected
+    "q84_prefix_filter_jaccard",  # round-affected
+    "q86_count_min_sketch",  # round-affected
+    "q103_lexical_rarity",  # round-affected
+    "q110_bpe_merges",  # round-affected
+    "q115_bpe_encode",  # round-affected
+    "q130_hll_distinct",  # round-affected
+    "q132_hll_overlap",  # round-affected
+    "q134_source_keywords",  # round-affected
+    "q139_length_quantile_sketch",  # round-affected
+    "q145_tokenizer_fertility",  # round-affected
+    "q156_budget_mixture",  # round-affected
     "q161_bm25_retrieval",  # round-affected
     "q50_dup_clusters",  # round-affected
+    "q51_stratified_sample",  # round-affected
+    "q52_length_deciles",  # round-affected
+    "q53_contamination",  # round-affected
+    "q54_window_chunks",  # round-affected
+    "q55_repetition_stats",  # round-affected
+    "q56_pii_scan",  # round-affected
+    "q57_boilerplate_filter",  # round-affected
+    "q58_sequence_packing",  # round-affected
+    "q69_geo_heatmap",  # round-affected
+    "q70_mixture_weights",  # round-affected
+    "q71_shuffle_split",  # round-affected
+    "q72_dup_spans",  # round-affected
+    "q75_bloom_decontamination",  # round-affected
+    "q80_weighted_sample",  # round-affected
+    "q85_cross_source_dups",  # round-affected
+    "q100_corpus_ship",  # round-affected
+    "q123_snapshot_diff",  # round-affected
+    "q124_source_drift",  # round-affected
     "q125_canonical_corpus",  # round-affected
+    "q128_refresh_dedup",  # round-affected
+    "q131_mixture_temperature",  # round-affected
     "q136_split_leakage",  # round-affected
     "q137_cluster_split",  # round-affected
+    "q140_target_affinity",  # round-affected
     "q146_soft_dedup_weights",  # round-affected
-    "q96_fk_profile",  # round-affected
-    "q33_media_metadata",  # round-affected
-    "q34_media_features",  # round-affected
-    "q118_image_phash_dedup",  # round-affected
-    "q35_frame_sample_plan",  # round-affected
-    "q164_wav_band_energy",  # round-affected
-    "q166_png_band_energy",  # round-affected
-    "q59_streaming_windows",  # round-affected
-    "q73_incremental_dedup",  # round-affected
-    "q102_incremental_dedup_capped",  # round-affected
-    "q30_cosine_topk",  # round-affected
-    "q107_cosine_topk_grid",  # round-affected
-    "q31_lsh_ann",  # round-affected
-    "q32_embedding_dedup",  # round-affected
-    "q38_ivf_ann",  # round-affected
-    "q101_ivf_nprobe",  # round-affected
-    "q74_semantic_dedup",  # round-affected
-    "q87_embedding_audit",  # round-affected
-    "q104_embedding_quantize",  # round-affected
-    "q105_quantized_ann",  # round-affected
-    "q106_ivf_quantized",  # round-affected
-    "q108_incremental_ann",  # round-affected
-    "q109_hybrid_rrf",  # round-affected
-    "q111_hybrid_rrf_ivf",  # round-affected
-    "q112_ann_recall_gate",  # round-affected
-    "q113_incremental_ann_evict",  # round-affected
-    "q116_contrastive_pairs",  # round-affected
-    "q117_contrastive_ivf",  # round-affected
-    "q119_balanced_clusters",  # round-affected
-    "q120_curriculum_sample",  # round-affected
-    "q121_domain_centroids",  # round-affected
-    "q122_centroid_classify",  # round-affected
-    "q126_knn_label_infer",  # round-affected
-    "q127_ivf_label_infer",  # round-affected
-    "q129_domain_outliers",  # round-affected
-    "q135_mmr_rerank",  # round-affected
-    "q138_mmr_ivf",  # round-affected
-    "q141_kcenter_coreset",  # round-affected
-    "q142_principal_direction",  # round-affected
-    "q143_common_removal",  # round-affected
-    "q147_dedup_disagreement",  # round-affected
-    "q148_split_balance",  # round-affected
-    "q151_bitext_mining",  # round-affected
-    "q152_knn_hubness",  # round-affected
-    "q153_domain_coherence",  # round-affected
-    "q159_knn_recall_gate",  # round-affected
-    "q114_streaming_ann",  # round-affected
-    "q155_streaming_novelty",  # round-affected
-    "q160_streaming_engagement",  # round-affected
+    "q149_balanced_subsample",  # round-affected
 ]
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

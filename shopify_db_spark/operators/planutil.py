@@ -1,4 +1,7 @@
-"""Plan-time sizing and broadcast gating shared by join operators.
+"""Plan shapes shared by the operators: plan-time sizing and
+broadcast gating for joins, the capped group-then-pair fold
+(:func:`cap_groups` + :func:`comb_pairs`) and per-group top-k
+ranking (:func:`rank_topk`).
 
 Several operators want the classic "broadcast the small side" fast
 path but must NOT take it unconditionally: a frame that is small at
@@ -23,8 +26,9 @@ small external query frame (a handful of probe vectors) broadcasts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 #: sentinel for "Catalyst could not size this plan" — callers treat
 #: it as infinitely large and take their safe non-broadcast path.
@@ -94,3 +98,60 @@ def blocked_pair_join(
         "__lb", F.explode(F.sequence(F.lit(0), F.lit(left_blocks - 1)))
     )
     return lg.join(rg, ["__lb", "__rb"]).drop("__lb", "__rb")
+
+
+def cap_groups(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The rows of ``df`` whose group by ``keys`` holds at most
+    ``cap`` rows — the hot-key guard (stop terms, boilerplate LSH
+    buckets) in front of every group-then-pair fold.
+
+    The group size is a window ``count(*)`` over ``keys``, filtered
+    BEFORE any per-group collection: a hot group is dropped while
+    it streams through the window (whose group buffer spills) and
+    is never built into one array on one reducer. The window's
+    ``hashpartitioning(keys)`` exchange already satisfies a
+    following ``groupBy(keys)`` or ``keys`` equi-join, so the cap
+    costs no extra exchange and the input lineage runs once."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return df.withColumn("__group_n", n).filter(
+        F.col("__group_n") <= cap
+    ).drop("__group_n")
+
+
+def comb_pairs(ds: str, pair: str, self_pairs: bool = False) -> Column:
+    """Explode of every element pair (x at i, y at j) of the array
+    column ``ds`` with i < j (i <= j when ``self_pairs``), each
+    emitted as the SQL expression ``pair`` over ``x`` and ``y``.
+    ``collect_list`` order is arbitrary, so callers orient each pair
+    themselves (e.g. by ``least``/``greatest`` of the ids)."""
+    rest = (
+        f"slice({ds}, i + 1, size({ds}) - i)"
+        if self_pairs
+        else f"slice({ds}, i + 2, size({ds}) - i - 1)"
+    )
+    return F.explode(
+        F.expr(
+            f"flatten(transform({ds}, (x, i) -> transform({rest},"
+            f" y -> {pair})))"
+        )
+    )
+
+
+def rank_topk(
+    df: DataFrame,
+    by: list[str],
+    score: str,
+    tie: str,
+    k: int | Column,
+) -> DataFrame:
+    """The ``k`` best rows per ``by`` group: ``row_number`` over
+    ``score`` descending with ties broken by ``tie`` ascending, so
+    the ranking is total and deterministic. Returns ``df``'s columns
+    plus an int ``rank``; ``k`` may be a Column (a per-row bound,
+    e.g. chosen per ``kind``)."""
+    w = Window.partitionBy(*by).orderBy(F.desc(score), F.asc(tie))
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*df.columns, F.col("rank").cast("int"))
+    )

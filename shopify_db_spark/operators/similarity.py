@@ -34,7 +34,10 @@ from pyspark.sql.window import Window
 from shopify_db_spark.operators.planutil import (
     STATS_UNKNOWN,
     blocked_pair_join,
+    cap_groups,
+    comb_pairs,
     plan_size_bytes,
+    rank_topk,
 )
 
 #: broadcast the QUERY side of an ANN scoring join only when its
@@ -221,14 +224,7 @@ def cosine_topk(
             F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return rank_topk(scored, ["query_id"], "cosine", "neighbor_id", k)
 
 
 def contrastive_topk(
@@ -286,27 +282,19 @@ def contrastive_topk(
         ).filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
+        F.when(F.col("c_label") == F.col("q_label"), F.lit("pos"))
+        .otherwise(F.lit("neg"))
+        .alias("kind"),
         "neighbor_id",
         cosine_with_norms(
             F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
         ).alias("cosine"),
-        F.when(F.col("c_label") == F.col("q_label"), F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("kind"),
-    )
-    w = Window.partitionBy("query_id", "kind").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
     )
     k_of = F.when(F.col("kind") == "pos", F.lit(k_pos)).otherwise(
         F.lit(k_neg)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_of)
-        .select(
-            "query_id", "kind", "neighbor_id", "cosine",
-            F.col("rank").cast("int"),
-        )
+    return rank_topk(
+        scored, ["query_id", "kind"], "cosine", "neighbor_id", k_of
     )
 
 
@@ -374,27 +362,19 @@ def contrastive_topk_ivf(
     )
     scored = pairs.select(
         "query_id",
+        F.when(F.col("c_label") == F.col("q_label"), F.lit("pos"))
+        .otherwise(F.lit("neg"))
+        .alias("kind"),
         "neighbor_id",
         cosine_with_norms(
             F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
         ).alias("cosine"),
-        F.when(F.col("c_label") == F.col("q_label"), F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("kind"),
-    )
-    w = Window.partitionBy("query_id", "kind").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
     )
     k_of = F.when(F.col("kind") == "pos", F.lit(k_pos)).otherwise(
         F.lit(k_neg)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_of)
-        .select(
-            "query_id", "kind", "neighbor_id", "cosine",
-            F.col("rank").cast("int"),
-        )
+    return rank_topk(
+        scored, ["query_id", "kind"], "cosine", "neighbor_id", k_of
     )
 
 
@@ -477,50 +457,7 @@ def lsh_bucket_ann(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
-
-
-def cosine_dedup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.98,
-    block_col: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-duplicate pairs: cosine ≥ threshold, optionally
-    blocked on a column (label, shard, LSH bucket) to bound the pair
-    join."""
-    a = vectors.select(
-        F.col(id_col).alias("id_a"),
-        as_double(F.col(vec_col)).alias("va"),
-        *( [F.col(block_col).alias("block_a")] if block_col else [] ),
-    ).withColumn("na", norm(F.col("va")))
-    b = vectors.select(
-        F.col(id_col).alias("id_b"),
-        as_double(F.col(vec_col)).alias("vb"),
-        *( [F.col(block_col).alias("block_b")] if block_col else [] ),
-    ).withColumn("nb", norm(F.col("vb")))
-    cond = F.col("id_a") < F.col("id_b")
-    if block_col:
-        cond = cond & (F.col("block_a") == F.col("block_b"))
-    return (
-        a.join(b, cond)
-        .select(
-            "id_a",
-            "id_b",
-            cosine_with_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return rank_topk(scored, ["query_id"], "cosine", "neighbor_id", k)
 
 
 #: auto-banding anchors: planes-per-band targets ~LSH_TARGET_BUCKET
@@ -977,14 +914,7 @@ def ivf_ann(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return rank_topk(scored, ["query_id"], "cosine", "neighbor_id", k)
 
 
 def rrf_fuse(
@@ -1024,14 +954,7 @@ def rrf_fuse(
             + F.coalesce(F.col("s_b"), F.lit(0.0))
         ).alias("rrf"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf"), F.asc("neighbor_id")
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rrf", F.col("rank").cast("int"))
-    )
+    return rank_topk(fused, ["query_id"], "rrf", "neighbor_id", k)
 
 
 def ann_index_probe(a: DataFrame, index: DataFrame, k: int) -> DataFrame:
@@ -1054,14 +977,7 @@ def ann_index_probe(a: DataFrame, index: DataFrame, k: int) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return rank_topk(scored, ["query_id"], "cosine", "neighbor_id", k)
 
 
 def ann_index_admit(
@@ -1501,19 +1417,26 @@ def sparse_cosine_topk(
     order-independent — no float-summation drift between engines or
     partitionings; only the final ``dot / (‖a‖·‖b‖)`` is floating.
 
+    Input contract: at most one posting row per (doc, term) — tf
+    already aggregated, as every in-repo caller does. Duplicate rows
+    would fold their same-doc i < j products into the (d, d) self
+    row and inflate the norm.
+
     Scale shape (round 15 — single-pass term-group fold; replaces
     the inverted-index self-join): per-term candidate fan-out is df²,
     bounded by pruning terms with document frequency above ``df_cap``
     (the stop-term / prefix-filtering bound; hot terms carry no
     ranking signal and are what makes naive term joins quadratic).
-    The cap means every surviving term's posting list fits one
-    bounded array, so ONE ``collect_list`` aggregate per term both
-    applies the df prune (``size(ds) <= df_cap`` — no separate
-    df-count aggregate or broadcast join) and generates the i ≤ j
-    pair products by array comb-explode — the posting lineage
-    (typically tokenize → shingle → tf aggregate) executes exactly
-    once instead of once per consumer (norms + both join sides; the
-    q76 before-plan carried 24 scans of ``documents``). The i = j
+    The prune (``planutil.cap_groups``) is a term-keyed window count
+    applied BEFORE collection, so a hot term's postings are dropped
+    as they stream and never built into an array; the ONE
+    ``collect_list`` aggregate per surviving term reuses the
+    window's term exchange and generates the i ≤ j pair products by
+    array comb-explode (``planutil.comb_pairs``) — the posting
+    lineage (typically tokenize → shingle → tf aggregate) executes
+    exactly once instead of once per consumer (norms + both join
+    sides; the q76 before-plan carried 24 scans of ``documents``).
+    The i = j
     "self pairs" carry tf² — exactly the squared-norm contributions —
     so norms fall out of the SAME aggregate as the dots: after the
     (doc, neighbor) rollup the self row (d, d) holds Σtf² = ‖d‖²,
@@ -1530,23 +1453,21 @@ def sparse_cosine_topk(
         F.col(tf_col).cast("long").alias("tf"),
     )
     grouped = (
-        posts.groupBy("term")
+        cap_groups(posts, ["term"], df_cap)
+        .groupBy("term")
         .agg(F.collect_list(F.struct("doc_id", "tf")).alias("ds"))
-        .filter(F.size("ds") <= df_cap)
     )
     # all i <= j array pairs per term: i = j rows are the norm
     # contributions (tf²), i < j rows the dot contributions; the
-    # (doc_id, neighbor_id) key is normalized by id order because
-    # collect_list order is arbitrary (the product is symmetric).
+    # (doc_id, neighbor_id) key is normalized by id order (the
+    # product is symmetric).
     pair_products = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) ->"
-                " transform(slice(ds, i + 1, size(ds) - i),"
-                " y -> struct(least(x.doc_id, y.doc_id) AS doc_id,"
-                " greatest(x.doc_id, y.doc_id) AS neighbor_id,"
-                " x.tf * y.tf AS p))))"
-            )
+        comb_pairs(
+            "ds",
+            "struct(least(x.doc_id, y.doc_id) AS doc_id,"
+            " greatest(x.doc_id, y.doc_id) AS neighbor_id,"
+            " x.tf * y.tf AS p)",
+            self_pairs=True,
         ).alias("e")
     ).select("e.doc_id", "e.neighbor_id", "e.p")
     dots = pair_products.groupBy("doc_id", "neighbor_id").agg(
@@ -1602,14 +1523,7 @@ def sparse_cosine_topk(
             ),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
-    )
+    return rank_topk(scored, ["doc_id"], "cosine", "neighbor_id", k)
 
 
 #: BM25 constants as exact rationals: k1 = 6/5 (1.2), b = 3/4 (0.75)
@@ -1658,11 +1572,11 @@ def bm25_topk(
 
     **Scale shape (round 15 — single-pass term-group fold, the q76
     rewrite).** df prune at ``df_cap`` bounds the candidate fan-out
-    (Σ_term qdf·df, the q76 stop-term bound), and the cap means every
-    surviving term's posting list fits one bounded array: ONE
-    ``collect_list`` aggregate per term applies the prune
-    (``size(ds) <= df_cap`` — the separate df-count aggregate and its
-    term-keyed join disappear; df itself is the array size) and
+    (Σ_term qdf·df, the q76 stop-term bound). The prune
+    (``planutil.cap_groups``) is a term-keyed window count applied
+    BEFORE collection, so hot terms never build an array; ONE
+    ``collect_list`` aggregate per surviving term reuses the
+    window's term exchange (df itself is the array size) and
     generates the query × candidate products by array comb-explode,
     so the posting lineage executes once instead of once per consumer
     (df + dl + both pruned sides — the q161 before-plan carried 16
@@ -1704,13 +1618,13 @@ def bm25_topk(
         )
     )
     grouped = (
-        flagged.groupBy("term")
+        cap_groups(flagged, ["term"], df_cap)
+        .groupBy("term")
         .agg(
             F.collect_list(
                 F.struct("doc_id", "tf", "dl", "is_q")
             ).alias("ds")
         )
-        .filter(F.size("ds") <= df_cap)
     )
     # per term: query entries × candidate entries (self excluded);
     # df is the posting-list size — cast long to keep the contrib
@@ -1742,13 +1656,4 @@ def bm25_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.sum("c").alias("score_scaled"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_scaled"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "doc_id", "score_scaled", F.col("rank").cast("int")
-        )
-    )
+    return rank_topk(scored, ["query_id"], "score_scaled", "doc_id", k)

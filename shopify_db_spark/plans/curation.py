@@ -29,6 +29,7 @@ from shopify_db_spark.operators.numbering import (
     global_row_numbers,
     global_running_sum,
 )
+from shopify_db_spark.operators.planutil import cap_groups
 from shopify_db_spark.plans.catalog import query
 from shopify_db_spark.plans.textops import _NORM, _Q27_ORACLE, _TOKS
 from shopify_db_spark.sources.tables import load_table
@@ -1603,13 +1604,7 @@ def refresh_dedup(
         "band_key",
     )
     if max_bucket is not None:
-        sizes = idx.groupBy("band", "band_key").agg(
-            F.count(F.lit(1)).alias("bucket_n")
-        )
-        idx = idx.join(
-            sizes.filter(F.col("bucket_n") <= max_bucket),
-            ["band", "band_key"],
-        ).drop("bucket_n")
+        idx = cap_groups(idx, ["band", "band_key"], max_bucket)
     probe = DD.banded_minhash(delta, id_col, text_col).select(
         F.col("doc_id").alias("delta_id"),
         F.col("minhashes").alias("delta_min"),

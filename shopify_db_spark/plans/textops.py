@@ -638,10 +638,12 @@ def q76_sparse_cosine_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     document by cosine over 3-token-shingle count vectors
     (``operators.similarity.sparse_cosine_topk``). The inverted-index
     complement to the dense-embedding tiers (q30–q32): dot products
-    are integer sums (engine-exact), and the posting self-join is
-    bounded by the ``df_cap`` stop-term prune — Σ_term df² with
-    df ≤ 64, the prefix-filtering idea that keeps term joins from
-    going quadratic on hot terms at 100 TB."""
+    are integer sums (engine-exact), generated per term by one
+    posting-list fold whose fan-out is bounded by the ``df_cap``
+    stop-term prune — Σ_term df² with df ≤ 64, the prefix-filtering
+    idea that keeps term pairing from going quadratic on hot terms
+    at 100 TB. The prune runs before the fold collects a term's
+    postings, so a hot term is never buffered."""
     from shopify_db_spark.operators.similarity import sparse_cosine_topk
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2024,10 +2026,10 @@ def q156_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # score sums at any summation order. Full derivation + magnitude
 # bounds in operators/similarity.bm25_topk.
 #
-# Scale shape: one posting aggregate, one df aggregate joined on
-# term WITHOUT a broadcast hint (the shingle vocabulary grows with
-# the corpus; AQE promotes when small), the Σ qdf·df candidate join
-# bounded by df_cap, a 1-row corpus-stats broadcast (q134's
+# Scale shape: one posting aggregate, a doc-keyed dl window, one
+# term-keyed window count that drops df > df_cap terms before the
+# per-term posting fold, the Σ qdf·df query × candidate products
+# generated inside that fold, a 1-row corpus-stats broadcast (q134's
 # normalizer idiom), one (query, doc) rollup, one query-keyed top-k
 # window.
 _Q161_N = 3

@@ -577,7 +577,7 @@ def int8_norm(q) -> F.Column:
 def _topk_int8(pairs: DataFrame, k: int) -> DataFrame:
     """Rank pairs carrying (qa, qb) codes and precomputed (qn, cn)
     norms; qcos = int_dot / (qn · cn) — one integer fold per pair."""
-    from pyspark.sql.window import Window
+    from shopify_db_spark.operators.planutil import rank_topk
 
     scored = pairs.select(
         "query_id",
@@ -587,14 +587,7 @@ def _topk_int8(pairs: DataFrame, k: int) -> DataFrame:
             / (F.col("qn") * F.col("cn"))
         ).alias("qcos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qcos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "qcos", F.col("rank").cast("int"))
-    )
+    return rank_topk(scored, ["query_id"], "qcos", "neighbor_id", k)
 
 
 def quantized_topk(

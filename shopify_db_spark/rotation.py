@@ -563,21 +563,3 @@ def stale_queries(
             if ev == ev_round and q in closures and closures[q] & changed:
                 out[q] = ev
     return out
-
-
-def recommended_head(repo: str = REPO) -> dict:
-    """The computed rotation head: every stale query (plan changed
-    since its newest driver evidence — these MUST be driver-sampled)
-    ordered oldest-evidence-first, then the freshness tail (oldest
-    evidence first) for the remaining sample slots."""
-    modules = load_package()
-    stale = stale_queries(modules, repo) or {}
-    rounds = evidence_rounds(repo)
-    from shopify_db_spark.plans import load_all
-
-    head = sorted(stale, key=lambda q: (stale[q], q))
-    tail = sorted(
-        (q for q in load_all() if q not in stale),
-        key=lambda q: (rounds.get(q, 0), q),
-    )
-    return {"base": round_base(repo), "stale": head, "freshness_tail": tail}

@@ -19,7 +19,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from shopify_db_spark.schemas import INVOICE_CSV_COLUMNS
@@ -107,17 +106,4 @@ def read_invoice_csv(spark: SparkSession, path: str) -> DataFrame:
         .option("header", True)
         .csv(path)
         .select(*INVOICE_CSV_COLUMNS)
-    )
-
-
-def normalize_empty_strings(df: DataFrame) -> DataFrame:
-    """Empty string → null across string columns (the reference's
-    pre-verification ``replace('', nan)``, ``tripletex.py:210``)."""
-    return df.select(
-        *[
-            F.nullif(F.col(c), F.lit("")).alias(c)
-            if f.dataType.simpleString() == "string"
-            else F.col(c)
-            for c, f in zip(df.columns, df.schema.fields)
-        ]
     )

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from shopify_db_spark.operators.similarity import sparse_cosine_topk
+from shopify_db_spark.operators.dedup import hash64_pairs, minhash_lsh_pairs
+from shopify_db_spark.operators.similarity import bm25_topk, sparse_cosine_topk
 from shopify_db_spark.plans import load_all
 from tests.conftest import SF_SMOKE
 
@@ -32,6 +33,43 @@ def test_sparse_cosine_identical_docs_rank_first(spark):
     assert 4 not in by_doc                        # no shared terms -> no rows
 
 
+def _subtree(lines, i):
+    """Indices of the plan-tree lines below line ``i`` (deeper
+    indentation, up to the next line at or above its level)."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for j in range(i + 1, len(lines)):
+        if depth(lines[j]) <= depth(lines[i]):
+            break
+        out.append(j)
+    return out
+
+
+def _assert_cap_below(df, cap, above):
+    """The cap's Filter sits below every physical-plan node whose line
+    matches ``above`` — the group is pruned before it is collected
+    (or paired), never after."""
+    import re
+
+    lines = (
+        df._jdf.queryExecution().executedPlan().toString().splitlines()
+    )
+    caps = [
+        i for i, line in enumerate(lines)
+        if "Filter" in line and re.search(rf"<= {cap}\)", line)
+    ]
+    tops = [i for i, line in enumerate(lines) if re.search(above, line)]
+    assert caps and tops, "\n".join(lines)
+    for t in tops:
+        assert set(caps) & set(_subtree(lines, t)), "\n".join(lines)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_sparse_cosine_df_cap_prunes_hot_terms(spark):
     # "hot" appears in all 4 docs; with df_cap=3 it must not
     # contribute, so docs sharing ONLY "hot" produce no pair.
@@ -41,13 +79,85 @@ def test_sparse_cosine_df_cap_prunes_hot_terms(spark):
         (3, "hot", 1), (3, "beta", 1),
         (4, "hot", 1), (4, "gamma", 1),
     ]
-    out = sparse_cosine_topk(_terms(spark, rows), k=3, df_cap=3).collect()
+    capped = sparse_cosine_topk(_terms(spark, rows), k=2, df_cap=3)
+    out = capped.collect()
     pairs = {(r["doc_id"], r["neighbor_id"]) for r in out}
     assert (1, 2) in pairs and (2, 1) in pairs
     assert all({a, b} == {1, 2} for a, b in pairs)
     # and the surviving pair's cosine reflects only the cold term
     top = [r for r in out if r["doc_id"] == 1][0]
     assert abs(top["cosine"] - 1.0) < 1e-12
+    # the hot term changes nothing: same rows as without it (norms
+    # are defined over the capped term space), though uncapped it
+    # would pair every doc
+    cold = [r for r in rows if r[1] != "hot"]
+    assert _rows(capped) == _rows(
+        sparse_cosine_topk(_terms(spark, cold), k=2, df_cap=3)
+    )
+    assert _rows(capped) != _rows(
+        sparse_cosine_topk(_terms(spark, rows), k=2, df_cap=64)
+    )
+    _assert_cap_below(capped, 3, r"ObjectHashAggregate.*collect_list")
+
+    # BM25: the hot term is replaced by one private term per doc, so
+    # document lengths and corpus stats stay those of the hot corpus
+    # while no candidate can come from it (self-matches excluded)
+    qids = spark.createDataFrame([(1,), (3,)], "doc_id long")
+    capped = bm25_topk(_terms(spark, rows), qids, k=2, df_cap=3)
+    private = [
+        (d, f"hot-{d}" if t == "hot" else t, tf) for d, t, tf in rows
+    ]
+    assert _rows(capped) == _rows(
+        bm25_topk(_terms(spark, private), qids, k=2, df_cap=3)
+    )
+    assert _rows(capped) != _rows(
+        bm25_topk(_terms(spark, rows), qids, k=2, df_cap=64)
+    )
+    _assert_cap_below(capped, 3, r"ObjectHashAggregate.*collect_list")
+
+    # MinHash-LSH: four copies of one boilerplate text share every
+    # band bucket; with max_bucket=3 those buckets are dropped whole
+    cold_docs = [
+        (10, "the quick brown fox jumps over the lazy dog again and again"),
+        (11, "the quick brown fox jumps over the lazy dog again and more"),
+        (12, "a completely different sentence about spark shuffles here"),
+    ]
+    boiler = "terms of service apply see our privacy policy for details now"
+    docs = cold_docs + [(i, boiler) for i in range(1, 5)]
+
+    def mh(rows, cap):
+        return minhash_lsh_pairs(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            max_bucket=cap,
+        )
+
+    capped = mh(docs, 3)
+    assert _rows(capped) == _rows(mh(cold_docs, 3))
+    assert _rows(capped) != _rows(mh(docs, 50))
+    _assert_cap_below(capped, 3, r"ObjectHashAggregate.*collect_list")
+
+    # hash64 pigeonhole blocks (max_hamming=4 → 5 blocks starting at
+    # bits 0, 13, 26, 39, 52): doc 0 and docs 1..4 agree ONLY on
+    # block 0 (value 0) — a 5-member bucket — and each doc i is 4
+    # bits from doc 0, one flip in each of blocks 1..4
+    hot = [(0, 0)] + [
+        (i, sum(1 << (start + i) for start in (13, 26, 39, 52)))
+        for i in range(1, 5)
+    ]
+    x = 0x0123456789ABCDEF
+    cold = [(10, x), (11, x ^ 1), (12, x ^ (1 << 40)), (13, x ^ (1 << 40))]
+
+    def h64(rows, cap):
+        return hash64_pairs(
+            spark.createDataFrame(rows, "doc_id long, simhash long"),
+            max_hamming=4,
+            max_bucket=cap,
+        )
+
+    capped = h64(cold + hot, 3)
+    assert _rows(capped) == _rows(h64(cold, 3))
+    assert _rows(capped) != _rows(h64(cold + hot, None))
+    _assert_cap_below(capped, 3, r"Join .*block_idx")
 
 
 def test_entity_resolution_finds_known_pair(spark):
